@@ -1,9 +1,13 @@
 package graft.sources
 
-import java.io.{BufferedReader, File, FileReader}
+import java.io.{BufferedReader, Closeable, File, FileInputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets
 import java.util
+import java.util.Optional
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -11,11 +15,14 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxRows, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.AccumulatorV2
+
+import graft.streaming.ErrorOnce
 
 /** `sharded-events`: a DataSource V2 **micro-batch streaming source** that
   * makes the reference's one native behavior — a sharded, resumable,
@@ -46,12 +53,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *     option `maxRecordsPerTrigger` caps each shard's advance per
   *     micro-batch via Spark's admission-control [[ReadLimit]].
   *
-  * Storage is one append-only TSV file set per shard under
-  * `root/shard_id=<id>/` (written by [[ShardedEvents.dump]]) — the local
-  * stand-in for the Kinesis service in this offline environment (no
-  * connector jar exists; SURVEY §7 H6). The listing layer is the only
-  * thing a real-service binding would replace; the offset/order/resume
-  * semantics proved by `ShardedSourceSpec` are the part that matters.
+  * Storage is one TSV file set per shard under `root/shard_id=<id>/`
+  * (written by [[ShardedEvents.dump]]) — the local stand-in for the
+  * Kinesis service in this offline environment (no connector jar exists;
+  * SURVEY §7 H6). A shard grows by new `part-*` files that sort after
+  * the existing ones; a published part file is immutable. Each stream
+  * keeps a sparse line index per part file ([[PartIndex]]: the line
+  * count and every [[ShardedEvents.IndexStride]]-th line's byte offset),
+  * checked against the file's length and mtime on every listing, so a
+  * trigger reads only new or changed files to find the shard ends, and a
+  * slice read seeks to within one stride of its first line. The listing
+  * layer is the only thing a real-service binding would replace; the
+  * offset/order/resume semantics proved by `ShardedSourceSpec` are the
+  * part that matters.
   * Scale note: one shard = one input partition = one task, the same
   * parallelism contract as the reference's goroutine-per-shard — a
   * 1000-shard stream fans out to 1000 tasks, and no stage ever holds more
@@ -66,6 +80,11 @@ object ShardedEvents {
   val schema: StructType = StructType.fromDDL(
     "shard_id STRING, seq BIGINT, event_id BIGINT, ts TIMESTAMP, " +
       "user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
+
+  /** Lines between two marks of a part file's index: a slice read skips
+    * fewer lines than this before its first row.
+    */
+  val IndexStride = 1024
 
   /** Null sentinel for the text payload column (`props`). */
   private[sources] val NullToken = "\\N"
@@ -107,46 +126,13 @@ object ShardedEvents {
       .sortBy(_.getName)
       .toSeq
 
-  /** Total record count of a shard (the service's "latest sequence"). */
-  private[sources] def shardEnd(root: String, shard: String): Long = {
-    var n = 0L
-    shardFiles(root, shard).foreach { f =>
-      val r = new BufferedReader(new FileReader(f))
-      try { while (r.readLine() != null) n += 1 }
-      finally r.close()
-    }
-    n
-  }
-
-  /** First position with record ts >= startUs — the `AT_TIMESTAMP`
-    * iterator (`main.go:300-305`). Lines are ts-sorted within a shard
-    * (dump() orders by arrival time), so this is the offset of the first
-    * non-skipped record.
-    */
-  private[sources] def atTimestamp(root: String, shard: String, startUs: Long): Long = {
-    if (startUs == Long.MinValue) return 0L
-    var pos = 0L
-    shardFiles(root, shard).foreach { f =>
-      val r = new BufferedReader(new FileReader(f))
-      try {
-        var line = r.readLine()
-        while (line != null) {
-          if (tsUsOf(line) >= startUs) return pos
-          pos += 1
-          line = r.readLine()
-        }
-      } finally r.close()
-    }
-    pos
-  }
-
   /** Line layout: seq \t event_id \t ts_us \t user_id \t event_type \t
     * value \t props (props last so embedded tabs cannot corrupt parsing;
     * split with a field limit keeps the remainder intact).
     */
-  private[sources] def tsUsOf(line: String): Long = {
-    val parts = line.split("\t", 7)
-    parts(2).toLong
+  private[sources] def tsUsOf(line: String): Option[Long] = {
+    val p = line.split("\t", 4)
+    if (p.length < 3) None else p(2).toLongOption
   }
 
   private[sources] def parse(shard: String, line: String): InternalRow = {
@@ -225,9 +211,203 @@ object ShardOffsets {
       .map(m => m.group(1) -> m.group(2).toLong).toMap)
 }
 
-/** One shard's slice of a micro-batch: lines [from, until). */
-case class ShardSlice(root: String, shard: String, from: Long, until: Long)
+/** One shard's slice of a micro-batch: lines [from, until). The reader
+  * opens part file `seekFile` at byte `seekByte`, which starts line
+  * `seekLine` of the shard, and skips to `from`; the defaults are the
+  * start of the shard.
+  */
+case class ShardSlice(root: String, shard: String, from: Long, until: Long,
+    seekFile: String = "", seekByte: Long = 0L, seekLine: Long = 0L)
   extends InputPartition
+
+/** Sparse line index of one part file, as of its `length` and `mtime`:
+  * its line count and the byte offset of every
+  * [[ShardedEvents.IndexStride]]-th line. Lines are split where
+  * `BufferedReader.readLine` splits them (`\n`, `\r` or `\r\n`; a last
+  * line without a terminator counts), so an index position and a
+  * reader position name the same line.
+  */
+private[sources] final class PartIndex(val length: Long, val mtime: Long,
+    val lines: Long, val marks: Array[Long])
+
+private[sources] object PartIndex {
+  /** Index the first `length` bytes of `f`. */
+  def build(f: File, length: Long, mtime: Long): PartIndex = {
+    val marks = new mutable.ArrayBuilder.ofLong
+    var lines = 0L
+    var atLineStart = true
+    var afterCR = false
+    val buf = new Array[Byte](1 << 16)
+    val in = new FileInputStream(f)
+    try {
+      var base = 0L
+      var n = 0
+      while (base < length && { n = in.read(buf, 0, math.min(buf.length.toLong, length - base).toInt); n > 0 }) {
+        var i = 0
+        while (i < n) {
+          val b = buf(i)
+          if (afterCR && b == '\n') afterCR = false // the LF of a CRLF
+          else {
+            afterCR = false
+            if (atLineStart) {
+              if (lines % ShardedEvents.IndexStride == 0) marks += base + i
+              atLineStart = false
+            }
+            if (b == '\n' || b == '\r') {
+              lines += 1
+              atLineStart = true
+              afterCR = b == '\r'
+            }
+          }
+          i += 1
+        }
+        base += n
+      }
+    } finally in.close()
+    if (!atLineStart) lines += 1
+    new PartIndex(length, mtime, lines, marks.result())
+  }
+}
+
+/** One shard as of one listing: its part files in order, each with its
+  * index, so a line position maps to a file and a byte offset without
+  * reading the lines before it.
+  */
+private[sources] final class ShardView(root: String, val shard: String,
+    files: IndexedSeq[File], parts: IndexedSeq[PartIndex]) {
+  import ShardedEvents.IndexStride
+
+  /** Per file, the shard position of its first line and the shard-wide
+    * number of its first mark; the totals come last.
+    */
+  private val starts: Array[Long] = parts.scanLeft(0L)(_ + _.lines).toArray
+  private val markStarts: Array[Long] =
+    parts.scanLeft(0L)(_ + _.marks.length).toArray
+
+  /** The shard's line count (the service's "latest sequence"). */
+  def end: Long = starts.last
+
+  /** The slice [from, until), seeking to the last mark at or before
+    * `from`. Past the shard's end it starts at the start of the shard,
+    * so the reader reaches the end and reports the short shard.
+    */
+  def slice(from: Long, until: Long): ShardSlice =
+    if (from >= end) ShardSlice(root, shard, from, until)
+    else {
+      val i = lastAtMost(starts, from)
+      val m = ((from - starts(i)) / IndexStride).toInt
+      ShardSlice(root, shard, from, until,
+        files(i).getName, parts(i).marks(m), starts(i) + m.toLong * IndexStride)
+    }
+
+  /** First position with record ts >= startUs — the `AT_TIMESTAMP`
+    * iterator (`main.go:300-305`). Lines are ts-sorted within a shard
+    * (dump() orders by arrival time), so a binary search over the
+    * marks' ts finds the block, and at most one block is scanned.
+    * Malformed lines are passed over: the reader skips them anyway.
+    */
+  def atTimestamp(startUs: Long): Long = {
+    // Marks whose ts is below startUs come first: count them.
+    var lo = 0L
+    var hi = markStarts.last
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (firstFrom(mid)(_ => true)._2 < startUs) lo = mid + 1 else hi = mid
+    }
+    if (lo == 0) 0L else firstFrom(lo - 1)(_ >= startUs)._1
+  }
+
+  /** Position and ts of the first well-formed line at or after mark `g`
+    * whose ts satisfies `ok`; (end, Long.MaxValue) if there is none.
+    */
+  private def firstFrom(g: Long)(ok: Long => Boolean): (Long, Long) = {
+    val i = lastAtMost(markStarts, g)
+    val m = (g - markStarts(i)).toInt
+    val lines = new ShardLines(files.iterator.drop(i), parts(i).marks(m),
+      starts(i) + m.toLong * IndexStride)
+    try {
+      var line = lines.next()
+      while (line != null) {
+        ShardedEvents.tsUsOf(line) match {
+          case Some(ts) if ok(ts) => return (lines.pos - 1, ts)
+          case _ => line = lines.next()
+        }
+      }
+      (end, Long.MaxValue)
+    } finally lines.close()
+  }
+
+  /** The largest i < a.length - 1 with a(i) <= v, for non-decreasing `a`
+    * with a(0) <= v < a.last: the file holding position v.
+    */
+  private def lastAtMost(a: Array[Long], v: Long): Int = {
+    var lo = 0
+    var hi = a.length - 2
+    while (lo < hi) {
+      val mid = (lo + hi + 1) >>> 1
+      if (a(mid) <= v) lo = mid else hi = mid - 1
+    }
+    lo
+  }
+}
+
+/** A shard's lines from a seek point on, across its part files:
+  * `files` from the one holding the seek point, which starts at byte
+  * `skipBytes` of the first file and is line `pos` of the shard.
+  */
+private[sources] final class ShardLines(files: Iterator[File],
+    private var skipBytes: Long, var pos: Long) extends Closeable {
+  private var reader: BufferedReader = _
+
+  /** The line at `pos`, advancing `pos`; null after the last file. */
+  def next(): String = {
+    while (true) {
+      if (reader == null) {
+        if (!files.hasNext) return null
+        val in = new FileInputStream(files.next())
+        in.getChannel.position(skipBytes)
+        skipBytes = 0L
+        reader = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+      }
+      val line = reader.readLine()
+      if (line != null) { pos += 1; return line }
+      reader.close()
+      reader = null
+    }
+    null // unreachable
+  }
+
+  override def close(): Unit = if (reader != null) reader.close()
+}
+
+/** The malformed lines a stream's readers skipped: how many, and the
+  * first one's description for the once-only report.
+  */
+final class MalformedLines extends AccumulatorV2[String, Long] {
+  private var count = 0L
+  private var firstSeen: String = _
+  def first: Option[String] = Option(firstSeen)
+  override def isZero: Boolean = count == 0L
+  override def copy(): MalformedLines = {
+    val c = new MalformedLines
+    c.count = count
+    c.firstSeen = firstSeen
+    c
+  }
+  override def reset(): Unit = { count = 0L; firstSeen = null }
+  override def add(v: String): Unit = {
+    if (firstSeen == null) firstSeen = v
+    count += 1
+  }
+  override def merge(other: AccumulatorV2[String, Long]): Unit = other match {
+    case o: MalformedLines =>
+      if (firstSeen == null) firstSeen = o.firstSeen
+      count += o.count
+    case _ => throw new UnsupportedOperationException(
+      s"cannot merge ${other.getClass.getName} into MalformedLines")
+  }
+  override def value: Long = count
+}
 
 /** The V2 provider — registered as `sharded-events` via
   * META-INF/services (DataSourceRegister).
@@ -267,14 +447,42 @@ class ShardedEventsScan(options: CaseInsensitiveStringMap) extends Scan {
 
 class ShardedEventsStream(root: String, startUs: Long, maxPerTrigger: Option[Long])
   extends MicroBatchStream with SupportsAdmissionControl
-  with SupportsTriggerAvailableNow {
+  with SupportsTriggerAvailableNow with ReportsSourceMetrics {
+
+  // Part-file indexes by path, kept for the query's lifetime: a file is
+  // read when first listed and again only if its length or mtime changed.
+  private val index = mutable.HashMap.empty[String, PartIndex]
+
+  /** Every listed shard with its files' indexes; entries of files no
+    * longer listed are dropped.
+    */
+  private def shards(): Map[String, ShardView] = synchronized {
+    val listed = mutable.HashSet.empty[String]
+    val views = ShardedEvents.listShards(root).map { shard =>
+      val files = ShardedEvents.shardFiles(root, shard).toIndexedSeq
+      val parts = files.map { f =>
+        val path = f.getPath
+        val (length, mtime) = (f.length(), f.lastModified())
+        listed += path
+        index.get(path).filter(p => p.length == length && p.mtime == mtime)
+          .getOrElse {
+            val p = PartIndex.build(f, length, mtime)
+            index(path) = p
+            p
+          }
+      }
+      shard -> new ShardView(root, shard, files, parts)
+    }.toMap
+    index.filterInPlace((path, _) => listed(path))
+    views
+  }
 
   // AT_TIMESTAMP positions, computed once per shard per query lifetime
   // (the reference's one GetShardIterator call per shard).
-  private val initialPos = scala.collection.mutable.Map.empty[String, Long]
-  private def initialPositionOf(shard: String): Long =
-    initialPos.getOrElseUpdate(shard,
-      ShardedEvents.atTimestamp(root, shard, startUs))
+  private val initialPos = mutable.Map.empty[String, Long]
+  private def initialPositionOf(view: ShardView): Long =
+    initialPos.getOrElseUpdate(view.shard,
+      if (startUs == Long.MinValue) 0L else view.atTimestamp(startUs))
 
   // Trigger.AvailableNow: pin the end-of-stream target at prepare time so
   // the bounded run drains to a fixed frontier and terminates.
@@ -285,12 +493,10 @@ class ShardedEventsStream(root: String, startUs: Long, maxPerTrigger: Option[Lon
   }
 
   private def allAvailable(): ShardOffsets =
-    ShardOffsets(ShardedEvents.listShards(root)
-      .map(s => s -> ShardedEvents.shardEnd(root, s)).toMap)
+    ShardOffsets(shards().map { case (s, v) => s -> v.end })
 
   override def initialOffset(): Offset =
-    ShardOffsets(ShardedEvents.listShards(root)
-      .map(s => s -> initialPositionOf(s)).toMap)
+    ShardOffsets(shards().map { case (s, v) => s -> initialPositionOf(v) })
 
   override def deserializeOffset(json: String): Offset =
     ShardOffsets.fromJson(json)
@@ -305,16 +511,17 @@ class ShardedEventsStream(root: String, startUs: Long, maxPerTrigger: Option[Lon
   /** Advance each shard from its committed position toward the shard end,
     * capped per shard by the read limit — the GetRecords pull
     * (`main.go:218,300-327`): `Limit` bounds one pull, and a shard first
-    * seen mid-query starts at its AT_TIMESTAMP position.
+    * seen mid-query starts at its AT_TIMESTAMP position. A shard missing
+    * from this listing (a `dump` overwrite in flight) keeps its position.
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startPos = start.asInstanceOf[ShardOffsets].positions
     val target = availableNowTarget
-    val next = ShardedEvents.listShards(root).map { shard =>
-      val from = startPos.getOrElse(shard, initialPositionOf(shard))
+    val next = shards().map { case (shard, view) =>
+      val from = startPos.getOrElse(shard, initialPositionOf(view))
       val end = target match {
         case Some(t) => t.positions.getOrElse(shard, from)
-        case None => ShardedEvents.shardEnd(root, shard)
+        case None => view.end
       }
       val capped = limit match {
         case m: ReadMaxRows => math.min(end, from + m.maxRows())
@@ -322,8 +529,8 @@ class ShardedEventsStream(root: String, startUs: Long, maxPerTrigger: Option[Lon
         case _ => end
       }
       shard -> math.max(from, capped)
-    }.toMap
-    ShardOffsets(next)
+    }
+    ShardOffsets(startPos ++ next)
   }
 
   override def reportLatestOffset(): Offset = allAvailable()
@@ -331,61 +538,79 @@ class ShardedEventsStream(root: String, startUs: Long, maxPerTrigger: Option[Lon
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[ShardOffsets].positions
     val e = end.asInstanceOf[ShardOffsets].positions
+    val views = shards()
     e.toSeq.sorted.flatMap { case (shard, until) =>
-      val from = s.getOrElse(shard, initialPositionOf(shard))
-      if (until > from) Some(ShardSlice(root, shard, from, until)) else None
+      val view = views.getOrElse(shard,
+        new ShardView(root, shard, IndexedSeq.empty, IndexedSeq.empty))
+      val from = s.getOrElse(shard, initialPositionOf(view))
+      if (until > from) Some(view.slice(from, until)) else None
     }.toArray
   }
 
+  private lazy val malformed: MalformedLines = {
+    val acc = new MalformedLines
+    SparkSession.active.sparkContext.register(acc, s"sharded-events malformed lines: $root")
+    acc
+  }
+  private val malformedOnce = new ErrorOnce(msg => System.err.println(msg))
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new ShardedEventsReaderFactory
+    new ShardedEventsReaderFactory(Some(malformed))
+
+  /** `malformedLines`: lines skipped so far; the first is reported once. */
+  override def metrics(latestConsumedOffset: Optional[Offset]): util.Map[String, String] = {
+    val skipped = malformed.value
+    if (skipped > 0) malformedOnce(
+      s"sharded-events $root: skipping malformed lines, first ${malformed.first.getOrElse("")}")
+    Map("malformedLines" -> skipped.toString).asJava
+  }
 
   override def commit(end: Offset): Unit = () // files are retained
   override def stop(): Unit = ()
 }
 
-class ShardedEventsReaderFactory extends PartitionReaderFactory {
+class ShardedEventsReaderFactory(malformed: Option[MalformedLines] = None)
+  extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ShardSliceReader(partition.asInstanceOf[ShardSlice])
+    new ShardSliceReader(partition.asInstanceOf[ShardSlice], malformed)
 }
 
 /** Sequential reader over one shard's [from, until) lines — per-shard
-  * order is the file order, exactly one reader per shard per batch.
+  * order is the file order, exactly one reader per shard per batch. A
+  * malformed line is skipped and counted in `malformed`; a shard that
+  * ends before `until` fails the read.
   */
-class ShardSliceReader(slice: ShardSlice) extends PartitionReader[InternalRow] {
-  private val files = ShardedEvents.shardFiles(slice.root, slice.shard).iterator
-  private var reader: BufferedReader = _
-  private var pos = 0L
+class ShardSliceReader(slice: ShardSlice, malformed: Option[MalformedLines] = None)
+  extends PartitionReader[InternalRow] {
+  private val lines = {
+    val files = ShardedEvents.shardFiles(slice.root, slice.shard)
+    val first = if (slice.seekFile.isEmpty) 0 else files.indexWhere(_.getName == slice.seekFile)
+    if (first < 0) throw new IllegalStateException(
+      s"sharded-events: shard ${slice.shard} slice [${slice.from}, ${slice.until}): " +
+        s"part file ${slice.seekFile} is no longer listed")
+    new ShardLines(files.iterator.drop(first), slice.seekByte, slice.seekLine)
+  }
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    while (pos < slice.until) {
-      val line = readLine()
-      if (line == null) return false // fewer lines than promised: stop
+    while (lines.pos < slice.until) {
+      val pos = lines.pos
+      val line = lines.next()
+      if (line == null) throw new IllegalStateException(
+        s"sharded-events: shard ${slice.shard} is shorter than its committed offset: " +
+          s"slice [${slice.from}, ${slice.until}) reached position $pos")
       if (pos >= slice.from) {
-        current = ShardedEvents.parse(slice.shard, line)
-        pos += 1
-        return true
+        try {
+          current = ShardedEvents.parse(slice.shard, line)
+          return true
+        } catch {
+          case NonFatal(e) => malformed.foreach(_.add(s"shard ${slice.shard} line $pos: $e"))
+        }
       }
-      pos += 1
     }
     false
   }
 
-  private def readLine(): String = {
-    while (true) {
-      if (reader == null) {
-        if (!files.hasNext) return null
-        reader = new BufferedReader(new FileReader(files.next()))
-      }
-      val line = reader.readLine()
-      if (line != null) return line
-      reader.close()
-      reader = null
-    }
-    null // unreachable
-  }
-
   override def get(): InternalRow = current
-  override def close(): Unit = if (reader != null) reader.close()
+  override def close(): Unit = lines.close()
 }

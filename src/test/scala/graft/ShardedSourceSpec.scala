@@ -1,15 +1,18 @@
 package graft
 
-import java.nio.file.Files
+import java.io.{ByteArrayOutputStream, File, PrintStream}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, StandardCopyOption}
 
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.connector.read.streaming.Offset
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
 import graft.operators.StreamingOps
-import graft.sources.ShardedEvents
+import graft.sources.{ShardOffsets, ShardSlice, ShardedEvents, ShardedEventsReaderFactory, ShardedEventsStream}
 
 /** The DSv2 `sharded-events` micro-batch source — the reference's native
   * identity (sharded resumable tail, reference `main.go:148-172,295-396`)
@@ -36,8 +39,79 @@ class ShardedSourceSpec extends SparkTestBase {
     r
   }
 
+  private val K = ShardedEvents.IndexStride
+
+  /** Publish part files `firstFile`, `firstFile + 1`, ... of shard
+    * `shard-<n>`, one per entry of `sizes`, holding its lines from
+    * `firstSeq` on (event_id = n * 1e6 + seq), each file written beside
+    * the stream and renamed in. `eol(f)` terminates the lines of file f;
+    * with `openEnd` the last line of the last file has no terminator.
+    */
+  private def writeShard(root: String, n: Int, sizes: Seq[Int],
+      firstSeq: Long = 0L, firstFile: Int = 0,
+      tsOf: Long => Long = seq => 1700000000000000L + seq * 1000L,
+      value: Long => String = seq => s"${seq % 100}.5",
+      eol: Int => String = _ => "\n", openEnd: Boolean = false): Unit = {
+    val dir = new File(root, f"shard_id=shard-$n%03d")
+    dir.mkdirs()
+    var seq = firstSeq
+    sizes.zipWithIndex.foreach { case (size, f) =>
+      val sb = new StringBuilder
+      (0 until size).foreach { j =>
+        sb.append(s"$seq\t${n * 1000000L + seq}\t${tsOf(seq)}\t${seq % 7}\tclick\t${value(seq)}\t\\N")
+        if (!(openEnd && f == sizes.size - 1 && j == size - 1)) sb.append(eol(f))
+        seq += 1
+      }
+      val name = f"part-${firstFile + f}%05d.txt"
+      val staged = new File(tmp("graft-stage"), name)
+      Files.write(staged.toPath, sb.toString.getBytes(StandardCharsets.UTF_8))
+      Files.move(staged.toPath, new File(dir, name).toPath, StandardCopyOption.ATOMIC_MOVE)
+    }
+  }
+
+  /** The seq of every row a slice reader returns. */
+  private def readSlice(slice: ShardSlice): Vector[Long] = {
+    val r = new ShardedEventsReaderFactory().createReader(slice)
+    try Iterator.continually(r.next()).takeWhile(identity).map(_ => r.get().getLong(1)).toVector
+    finally r.close()
+  }
+
+  private def positions(o: Offset): Map[String, Long] =
+    o.asInstanceOf[ShardOffsets].positions
+
+  /** Poll until `sink` holds `n` rows; fail on timeout or query error. */
+  private def awaitRows(q: StreamingQuery,
+      sink: ArrayBuffer[(Long, String, Long, Long)], n: Long): Unit = {
+    def rows: Long = sink.synchronized(sink.size.toLong)
+    val deadline = System.nanoTime() + 120e9.toLong
+    while (rows < n && System.nanoTime() < deadline) {
+      q.exception.foreach(e => throw e)
+      Thread.sleep(20)
+    }
+    assert(rows == n, s"expected $n rows")
+  }
+
+  /** Every shard's rows in arrival order are exactly seq 0..n-1, once. */
+  private def assertShardOrder(rows: Seq[(Long, String, Long, Long)]): Unit =
+    rows.groupBy(_._2).foreach { case (shard, rs) =>
+      val seqs = rs.map(_._3)
+      assert(seqs == (0L until seqs.size.toLong),
+        s"shard $shard lost, duplicated or reordered lines: ${seqs.take(10)}...")
+    }
+
   private def payload(df: DataFrame): DataFrame =
     df.select("event_id", "ts", "user_id", "event_type", "value", "props")
+
+  /** A foreachBatch body appending every micro-batch's
+    * (batchId, shard_id, seq, event_id) rows to `sink` in arrival order.
+    */
+  private def collectInto(sink: ArrayBuffer[(Long, String, Long, Long)]): (DataFrame, Long) => Unit =
+    (batch, batchId) =>
+      batch.select("shard_id", "seq", "event_id").collect().foreach { r =>
+        sink.synchronized {
+          sink += ((batchId, r.getString(0), r.getLong(1), r.getLong(2)))
+        }
+      }
 
   /** Drain a stream to completion (AvailableNow), collecting every
     * micro-batch's rows in arrival order via foreachBatch.
@@ -47,14 +121,7 @@ class ShardedSourceSpec extends SparkTestBase {
     val q = stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.select("shard_id", "seq", "event_id").collect().foreach { r =>
-          sink.synchronized {
-            sink += ((batchId, r.getString(0), r.getLong(1), r.getLong(2)))
-          }
-        }
-        ()
-      }
+      .foreachBatch(collectInto(sink))
       .start()
     assert(q.awaitTermination(120000L), "stream did not drain in time")
   }
@@ -363,5 +430,148 @@ class ShardedSourceSpec extends SparkTestBase {
     drain(ShardedEvents.readStream(spark, root12), tmp("ckpt"), got)
     assert(got.map(_._2).distinct.size == dirs.size, "every page of shards must be read")
     assert(got.size == batchDF.count())
+  }
+
+  test("index seek: slices from K-1, K, K+1, a file boundary and the last line equal a start-of-shard read") {
+    val r = tmp("graft-seek")
+    // Three files over K lines each, ending lines in LF, CRLF and CR;
+    // the last line of the shard has no terminator.
+    val sizes = Seq(2 * K + 300, K + 5, 3 * K + 17)
+    writeShard(r, 0, sizes, eol = Seq("\n", "\r\n", "\r"), openEnd = true)
+    val n = sizes.sum.toLong
+    val stream = new ShardedEventsStream(r, Long.MinValue, None)
+    assert(positions(stream.reportLatestOffset()) == Map("shard-000" -> n))
+    val b1 = sizes(0).toLong
+    val b2 = b1 + sizes(1)
+    for (from <- Seq(0L, K - 1L, K.toLong, K + 1L, b1 - 1, b1, b1 + 1, b2, n - 1);
+         until <- Seq(math.min(n, from + 1500), n)) {
+      val planned = stream.planInputPartitions(
+        ShardOffsets(Map("shard-000" -> from)), ShardOffsets(Map("shard-000" -> until)))
+      val slice = planned.head.asInstanceOf[ShardSlice]
+      assert(slice.seekLine <= from && from - slice.seekLine < K, s"seek $slice")
+      assert(from < K || slice.seekLine > 0L, s"seek $slice")
+      val got = readSlice(slice)
+      assert(got == readSlice(ShardSlice(r, "shard-000", from, until)), s"from $from until $until")
+      assert(got == (from until until), s"from $from until $until")
+    }
+  }
+
+  test("AT_TIMESTAMP on a multi-block shard equals a linear scan") {
+    val r = tmp("graft-atts")
+    // Runs of three equal timestamps, so equal ts straddle index marks.
+    val tsOf = (seq: Long) => 1700000000000000L + (seq / 3) * 10L
+    val sizes = Seq(K + 100, 2 * K + 1, K)
+    writeShard(r, 0, sizes, tsOf = tsOf)
+    val n = sizes.sum
+    val ts = (0 until n).map(i => tsOf(i.toLong))
+    def linear(startUs: Long): Long = {
+      val i = ts.indexWhere(_ >= startUs)
+      if (i < 0) n.toLong else i.toLong
+    }
+    val fileStarts = sizes.scanLeft(0)(_ + _)
+    val marks = sizes.indices.flatMap(f => (0 until sizes(f) by K).map(fileStarts(f) + _))
+    val rng = new scala.util.Random(7)
+    val probes = Seq(ts.head - 1, ts.head, ts.last, ts.last + 1) ++
+      marks.flatMap(m => Seq(ts(m) - 1, ts(m), ts(m) + 1)) ++
+      Seq.fill(20)(ts.head + rng.nextLong(ts.last - ts.head))
+    probes.foreach { startUs =>
+      val got = positions(new ShardedEventsStream(r, startUs, None).initialOffset())
+      assert(got == Map("shard-000" -> linear(startUs)), s"startUs $startUs")
+    }
+  }
+
+  test("a shard shorter than its committed offset fails the read, naming shard and positions") {
+    val r = tmp("graft-short")
+    writeShard(r, 0, Seq(K + 10, 500))
+    val ckpt = tmp("ckpt")
+    // Batch 0's offsets reach the offset log; the sink then fails before
+    // the batch commits, so a restart replays batch 0 from the log.
+    val crash = ShardedEvents.readStream(spark, r).writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (_: DataFrame, _: Long) => throw new RuntimeException("sink down") }
+      .start()
+    intercept[StreamingQueryException](crash.awaitTermination(120000L))
+    val part = new File(r, "shard_id=shard-000/part-00001.txt")
+    val kept = Files.readAllLines(part.toPath).subList(0, 200)
+    Files.write(part.toPath, (String.join("\n", kept) + "\n").getBytes(StandardCharsets.UTF_8))
+    val q = ShardedEvents.readStream(spark, r).writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, _: Long) => b.collect(); () }
+      .start()
+    val e = intercept[StreamingQueryException](q.awaitTermination(120000L))
+    val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(msg.contains("shard shard-000 is shorter than its committed offset"), msg)
+    assert(msg.contains(s"slice [0, ${K + 510}) reached position ${K + 210}"), msg)
+  }
+
+  test("a malformed line is skipped, counted in the source metrics and reported once") {
+    val r = tmp("graft-bad")
+    val bad = Set(3L, K + 50L)
+    writeShard(r, 0, Seq(K + 200),
+      value = seq => if (bad(seq)) "not-a-number" else s"${seq % 100}.5")
+    val got = ArrayBuffer.empty[(Long, String, Long, Long)]
+    val err = new ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new PrintStream(err, true))
+    val q = try {
+      val q = ShardedEvents.readStream(spark, r, maxRecordsPerTrigger = Some(500L)).writeStream
+        .option("checkpointLocation", tmp("ckpt"))
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch(collectInto(got))
+        .start()
+      assert(q.awaitTermination(120000L), "stream did not drain")
+      q
+    } finally System.setErr(saved)
+    assert(got.map(_._3) == (0L until K + 200L).filterNot(bad))
+    val counts = q.recentProgress.map(_.sources.head.metrics.get("malformedLines"))
+    assert(counts.last == "2", counts.mkString(","))
+    val reports = new String(err.toByteArray, StandardCharsets.UTF_8).linesIterator
+      .filter(_.contains("skipping malformed lines")).toSeq
+    assert(reports.size == 1, reports.mkString("\n"))
+    assert(reports.head.contains("shard shard-000 line 3:"), reports.head)
+  }
+
+  test("a stream growing by new part files mid-query delivers every line once, in order") {
+    val r = tmp("graft-grow")
+    writeShard(r, 0, Seq(K + 300, 2 * K))
+    writeShard(r, 1, Seq(K + 7))
+    val got = ArrayBuffer.empty[(Long, String, Long, Long)]
+    val q = ShardedEvents.readStream(spark, r, maxRecordsPerTrigger = Some(700L)).writeStream
+      .option("checkpointLocation", tmp("ckpt"))
+      .trigger(Trigger.ProcessingTime("100 milliseconds"))
+      .foreachBatch(collectInto(got))
+      .start()
+    try {
+      awaitRows(q, got, 4L * K + 307)
+      writeShard(r, 0, Seq(K + 1, 10), firstSeq = 3L * K + 300, firstFile = 2)
+      writeShard(r, 1, Seq(2 * K), firstSeq = K + 7L, firstFile = 1)
+      awaitRows(q, got, 7L * K + 318)
+    } finally q.stop()
+    assertShardOrder(got.toSeq)
+  }
+
+  test("a stream grown by a dump overwrite mid-query delivers every record once, in order") {
+    val r = tmp("graft-regrow")
+    val cutUs = batchDF
+      .select(expr("percentile_approx(unix_micros(ts), 0.5, 100)"))
+      .head().getLong(0)
+    val phase1 = batchDF.filter(unix_micros(col("ts")) < cutUs)
+    ShardedEvents.dump(phase1, r, 4)
+    val got = ArrayBuffer.empty[(Long, String, Long, Long)]
+    val q = ShardedEvents.readStream(spark, r).writeStream
+      .option("checkpointLocation", tmp("ckpt"))
+      .trigger(Trigger.ProcessingTime("100 milliseconds"))
+      .foreachBatch(collectInto(got))
+      .start()
+    try {
+      awaitRows(q, got, phase1.count())
+      ShardedEvents.dump(batchDF, r, 4)
+      awaitRows(q, got, batchDF.count())
+    } finally q.stop()
+    assertShardOrder(got.toSeq)
+    assert(got.map(_._4).toSet == batchDF.select("event_id").collect().map(_.getLong(0)).toSet)
   }
 }
